@@ -59,9 +59,10 @@ object DedupScaleBench {
         f"(expected ~${n / 10}) ${n / exactSec / 1e6}%.2fM docs/s")
     }
 
-    // simhash runs BEFORE the LSH stage: minhashLsh caches its
-    // shingle/signature tables internally (load-bearing there), and
-    // that memory pressure must not sit under another timed stage
+    // simhash runs BEFORE the LSH stage: minhashLsh keeps its
+    // shingle/signature table checkpointed for as long as its result
+    // lives, and that memory pressure must not sit under another timed
+    // stage
     if (enabled("simhash")) {
       val (shPairs, shSec) = time {
         Dedup.simhashPairs(docs, maxHamming = 3).count()

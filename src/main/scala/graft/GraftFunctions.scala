@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Shim
 
 import graft.functions._
 
@@ -101,7 +102,11 @@ object GraftFunctions {
       "built-in")
     reg.createOrReplaceTempFunction(
       "graft_intersect_count",
-      es => IntersectCardinality(es(0), es(1)), "built-in")
+      es => {
+        if (es.length != 2)
+          throw Shim.wrongNumArgs("graft_intersect_count", 2, es.length)
+        IntersectCardinality(es(0), es(1))
+      }, "built-in")
     reg.createOrReplaceTempFunction(
       "graft_nearest_cells2",
       es => NearestCellsTwoLevel(es(0),

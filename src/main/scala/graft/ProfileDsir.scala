@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throwaway-style stage triage for Corpus.dsirWeights (kept as a
-  * profiling main like ProfileLsh/ProfileMaint): times each candidate
+  * profiling main like ProfileMaint): times each candidate
   * stage of the DSIR plan in isolation to locate the hot one. */
 object ProfileDsir {
   def main(args: Array[String]): Unit = {

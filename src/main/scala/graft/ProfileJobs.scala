@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Shim
 
 /** Per-JOB triage (r21): like ProfileQuery, but prints every job's
   * wall time, task count and summed task time, so a query whose wall
@@ -62,15 +63,12 @@ object ProfileJobs {
             val t0 = System.nanoTime()
             val rows = fn(spark, sfDir).count()
             val wall = (System.nanoTime() - t0) / 1e9
-            Thread.sleep(400)
+            Shim.drainListenerBus(spark)
             println(f"\n=== $n pass=$pass wall=$wall%.2fs rows=$rows")
             import scala.jdk.CollectionConverters._
             val rs = jobs.values().asScala.toSeq.sortBy(_.id)
             rs.foreach { r =>
-              // a job whose end event has not drained yet would print
-              // a huge negative wall — flag it instead
-              val w = if (r.end == 0L) Double.NaN
-                else (r.end - r.start) / 1e3
+              val w = (r.end - r.start) / 1e3
               println(f"  job=${r.id}%4d wall=$w%6.2fs tasks=${r.tasks}%5d " +
                 f"taskTime=${r.taskTimeMs / 1e3}%8.2fs  ${r.site.take(90)}")
             }

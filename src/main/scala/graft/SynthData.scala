@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared deterministic synthetic generators for the scale benches and
-  * profilers (ScaleBench / ProfileBigQ / DedupScaleBench / ProfileLsh)
+  * profilers (ScaleBench / ProfileBigQ / DedupScaleBench)
   * — ONE definition each, so a profiler can never silently drift from
   * the corpus of the bench it triages. Hash-derived, no RNG: the same
   * (n, seed params) always produce byte-identical data at any

@@ -116,20 +116,8 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     // verify against full sets (same arithmetic as ngramJaccard)
-    val shSets = sh.groupBy(col("doc_id"))
-      .agg(collect_list(col("sh")).as("shs"))
-    candidates
-      .join(shSets.select(col("doc_id").as("doc_a"), col("shs").as("sh_a")),
-        "doc_a")
-      .join(shSets.select(col("doc_id").as("doc_b"), col("shs").as("sh_b")),
-        "doc_b")
-      .withColumn("inter", // fused count (r21) — identical to
-        // size(array_intersect(..)), no intersection-array build
-        GraftFunctions.intersectCount(col("sh_a"), col("sh_b")).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifyPairs(sh.groupBy(col("doc_id")).agg(collect_list(col("sh")).as("sh")),
+      candidates, threshold)
   }
 
   /** Stats-adaptive exact n-gram Jaccard: same output as `ngramJaccard`
@@ -170,6 +158,17 @@ object Dedup {
     * exact shingle-set Jaccard so the output matches the brute-force
     * oracle (the LSH miss probability at j >= threshold is
     * (1-t^r)^b ≈ 1e-8 for the default 64×2 at t=0.5).
+    *
+    * The one-pass mode is a short job chain over ONE relation: the
+    * (doc_id, sh, sig) table is computed once, the bucket self-join of
+    * its band rows gives the candidates (`candidatePairs`), and two
+    * joins back onto the same table verify them. The table is a lazy
+    * local checkpoint, so every consumer reads one shallow leaf: the
+    * driver analyzes a small plan instead of re-resolving a deep
+    * Dataset chain per consumer, CollapseProject cannot copy the
+    * numHashes-hash signature expression into the consumers, and
+    * nothing is registered with the session's cache manager — the
+    * context cleaner drops the blocks once the result is unreachable.
     */
   def minhashLsh(docs: DataFrame, shingleN: Int, threshold: Double,
       numHashes: Int = 128, bands: Int = 64,
@@ -177,49 +176,27 @@ object Dedup {
       bandGroups: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val groups = resolveBandGroups(docs, bands, bandGroups)
-    // NO Spread.cpu here (r21, measured): the sub-split doc scan does
-    // serialize the shingle/signature cache builds on one task, but an
-    // interleaved A/B showed the spread DOUBLES summed task time
-    // (35 s → 70 s: exchange + 32-way columnar cache builders + task
-    // overhead on 1778 vs 1435 tasks) for flat-to-worse wall
-    // (6.3 → 6.6 s median) — the serial cache builds are not the
-    // critical path; the AQE job chain is.
-    val shingled = docs.select(col(idCol).as("doc_id"),
-      shinglesOf(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
+    // NO Spread.cpu here (measured): on a sub-split doc scan the spread
+    // doubled summed task time (35 s → 70 s: exchange + cache builders
+    // + task overhead) for flat-to-worse wall
+    val shingled = shingleTable(docs, shingleN, idCol, textCol)
     if (groups <= 1) {
-      // .cache() is load-bearing: without it, CollapseProject inlines
-      // the 128-hash signature expression into every band slice (64×)
-      // and the self-join recomputes it again — observed 87s→2s at
-      // sf0.01. At 100 TB the signature table is persisted parquet for
-      // the same reason (compute once, shuffle only 8·numHashes
-      // bytes/doc).
-      val withSh = shingled.cache()
-      // (doc_id, sig) ONLY — caching the signature next to the shingle
-      // array (withColumn) would hold the wide `sh` twice and at 10M+
-      // docs the duplicate spills past this host's disk; the verify
-      // join reads `sh` from the withSh cache
-      val sig = withSh
-        .select(col("doc_id"),
+      val table = shingled
+        .select(col("doc_id"), col("sh"),
           minhashSignature(col("sh"), numHashes).as("sig"))
-        .cache()
-      bandCollapseVerify(withSh, sig, threshold, numHashes, bands, 1)
+        .localCheckpoint(eager = false)
+      bandAndVerify(table, table, threshold, numHashes, bands, 1)
     } else {
-      // LOW-DISK mode (bandGroups > 1): the corpus-wide shingle cache
+      // LOW-DISK mode (bandGroups > 1): the corpus-wide shingle table
       // is the single biggest disk tenant at 10M+ docs (wide arrays,
       // MEMORY_AND_DISK spill) and the verify step only ever reads the
-      // COLLIDING docs' arrays — so it is not built at all. The verify
-      // semi-join receives the LAZY shingle projection: candidate ids
-      // broadcast into it, shingles are recomputed narrowly per row
-      // and non-colliding docs' arrays never exist off-CPU. Only the
-      // compact signature relation is cached (and candidatesSliced
-      // drops even that once the rep relation is materialized).
-      val sig = shingled
-        .select(col("doc_id"),
-          minhashSignature(col("sh"), numHashes).as("sig"))
+      // COLLIDING docs' arrays — so it is not built at all. Only the
+      // compact signature relation is cached, for the slices to share,
+      // and it is dropped as soon as the candidate set is checkpointed.
+      val sig = signatureTable(docs, shingleN, numHashes, idCol, textCol)
         .cache()
-      bandCollapseVerify(shingled, sig, threshold, numHashes, bands,
-        groups)
+      try bandAndVerify(shingled, sig, threshold, numHashes, bands, groups)
+      finally sig.unpersist(blocking = true)
     }
   }
 
@@ -234,7 +211,7 @@ object Dedup {
     * sweet spot at both the 2M and 20M scale points: equal-or-faster
     * wall clock and the only mode whose temp-disk peak stays inside
     * an 80 GB budget at 20M). Below the threshold the one-pass mode
-    * (corpus-wide shingle cache, AQE-replanned verify) wins on fixed
+    * (one shingle/signature table, one candidate shuffle) wins on fixed
     * overhead. An explicit `requested >= 1` bypasses the count and
     * forces that mode — the oracle pack pins 1 vs 3 vs 4 equal. */
   private[graft] def resolveBandGroups(docs: DataFrame, bands: Int,
@@ -260,10 +237,16 @@ object Dedup {
   def signatureTable(docs: DataFrame, shingleN: Int,
       numHashes: Int = 128, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
+    shingleTable(docs, shingleN, idCol, textCol)
+      .select(col("doc_id"), minhashSignature(col("sh"), numHashes).as("sig"))
+
+  /** (doc_id, sh) shingle sets of the docs that have at least one
+    * shingle — the relation every LSH path bands and verifies. */
+  private def shingleTable(docs: DataFrame, shingleN: Int, idCol: String,
+      textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"),
       shinglesOf(col(textCol), shingleN).as("sh"))
       .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), minhashSignature(col("sh"), numHashes).as("sig"))
 
   /** MinHash-LSH near-dup pairs from a PRECOMPUTED signature relation
     * (typically `signatureTable` persisted to parquet) — band off the
@@ -277,125 +260,56 @@ object Dedup {
       bandGroups: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val groups = resolveBandGroups(docs, bands, bandGroups)
-    val withSh = docs.select(col(idCol).as("doc_id"),
-      shinglesOf(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .cache()
-    bandCollapseVerify(withSh,
+    val shingled = shingleTable(docs, shingleN, idCol, textCol)
+    // one-pass: both verify joins read the shingles, so they are
+    // computed once; the sliced mode diets them to the colliding docs
+    bandAndVerify(
+      if (groups <= 1) shingled.localCheckpoint(eager = false) else shingled,
       sigs.select(col("doc_id"), col("sig")), threshold, numHashes, bands,
       groups)
   }
 
-  /** (rep, members) identical-signature groups — EXACT, with the hot
-    * path on 8-byte keys: docs first group on xxhash64(sig) (only the
-    * hash shuffles per doc, not the 8·numHashes-byte signature); a
-    * singleton hash group is trivially an exact signature group, and
-    * only the multi-member hash groups — the only place a hash
-    * collision could merge two DIFFERENT signatures and silently lose
-    * the unrepresented one's band collisions (a miss the exact verify
-    * cannot repair; it only filters) — are regrouped by the FULL
-    * signature. The wide keys travel a second time only for that
-    * colliding sliver (the duplicate share of the corpus; near zero
-    * on a mostly-unique one). */
-  private[graft] def sigCollapseGroups(sig: DataFrame): DataFrame = {
-    val hashGroups = sig
-      .select(col("doc_id"), xxhash64(col("sig")).as("_hk"))
-      .groupBy(col("_hk"))
-      .agg(array_sort(collect_list(col("doc_id"))).as("members"))
-    val single = hashGroups.filter(size(col("members")) === 1)
-      .select(element_at(col("members"), 1).as("rep"), col("members"))
-    val multiIds = hashGroups.filter(size(col("members")) > 1)
-      .select(explode(col("members")).as("doc_id"))
-    val multiExact = sig.join(multiIds, Seq("doc_id"), "left_semi")
-      .groupBy(col("sig"))
-      .agg(array_sort(collect_list(col("doc_id"))).as("members"))
-      .select(element_at(col("members"), 1).as("rep"), col("members"))
-    single.unionByName(multiExact)
-  }
-
-  /** Shared tail of both LSH entry points: identical-signature
-    * collapse -> banding over representatives -> candidate expansion
-    * -> diet-joined exact-jaccard verification. */
-  private def bandCollapseVerify(withSh: DataFrame, sig: DataFrame,
+  /** Shared tail of both LSH entry points: candidates from the
+    * (doc_id, sig) relation — one bucket self-join, or `bandGroups`
+    * parked slices of it — then the exact-Jaccard verify against the
+    * (doc_id, sh) relation. */
+  private def bandAndVerify(shingled: DataFrame, sig: DataFrame,
       threshold: Double, numHashes: Int, bands: Int,
-      bandGroups: Int = 1): DataFrame = {
-    require(bandGroups >= 1, "bandGroups must be >= 1")
-    // IDENTICAL-SIGNATURE COLLAPSE: docs with equal signatures band
-    // identically (every band hash is a function of the signature
-    // alone), so band ONE representative per signature group and
-    // expand members back over the rep pair relation afterwards. On a
-    // dup-heavy corpus this is the big candidate-stage lever — an
-    // exact-copy pair otherwise surfaces from ALL `bands` buckets
-    // before distinct (64 identical pair rows per copy at the
-    // defaults), and real pretraining corpora are dup-heavy by nature
-    // (10% planted here; the reference scenario for exact dedup).
-    // The expanded candidate set is provably the banded-collision set:
-    // sig(a)=sig(rep) means a collides exactly where rep does, and
-    // within-group pairs collide in every band by construction.
-    val groups = sigCollapseGroups(sig)
-      .cache() // consumed by rep selection + both expansion joins
-    val reps = sig.join(
-      groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-    val repCands =
-      if (bandGroups <= 1) candidatesOf(bandHashes(reps, numHashes, bands))
-      else candidatesSliced(reps, sig, numHashes, bands, bandGroups)
-    // expansion: cross-group pairs (members_a x members_b, ordered) +
-    // within-group pairs (identical sigs collide in every band)
-    val cross = repCands
-      .join(groups.select(col("rep").as("doc_a"),
-        col("members").as("ms_a")), "doc_a")
-      .join(groups.select(col("rep").as("doc_b"),
-        col("members").as("ms_b")), "doc_b")
-      .select(explode(col("ms_a")).as("a"), col("ms_b"))
-      .select(col("a"), explode(col("ms_b")).as("b"))
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"))
-    val within = groups.filter(size(col("members")) > 1)
-      .select(col("members").as("ids"))
-      .select(explode(pairsOfSorted(col("ids"))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
-    // no distinct needed: rep pairs are distinct, expansion of
-    // disjoint groups cannot repeat a pair, and within-group pairs
-    // never coincide with cross-group ones
-    // cached: consumed twice below (id extraction + the verify join) —
-    // without it the whole candidate pipeline runs twice
-    val candidates = cross.unionByName(within).cache()
-    // verify-join DIET: only docs that appear in some candidate pair
-    // need their shingle arrays in the verify join. Semi-joining the
-    // array relation down to candidate ids FIRST means the (wide)
-    // shingle arrays of never-colliding docs — the overwhelming
-    // majority of a mostly-unique corpus — are never shuffled; AQE
-    // broadcasts the candidate-id list when it is small. Measured at
-    // the 2M planted-dup corpus: the arrays entering the verify
-    // shuffle drop from 2×2M to the ~0.6M colliding docs.
-    val candIds = candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id")))
-      .distinct()
-    // low-disk mode pins the diet's physical shape: the id list is
-    // BROADCAST (ids are 8 bytes — even 20M colliding docs are a
-    // ~160 MB build side) so the corpus-sized shingle relation is
-    // filtered in place with NO shuffle, and the dieted result is
-    // CACHED because both pair sides consume it — left to AQE at 20M,
-    // the estimator picked a sort-merge semi-join that shuffled the
-    // recomputed 20M-doc array relation TWICE and overflowed the
-    // host's disk in sort spills
-    val candIdsSide =
-      if (bandGroups > 1) broadcast(candIds) else candIds
-    val shSetsBase = withSh.select(col("doc_id"), col("sh"))
-      .join(candIdsSide, Seq("doc_id"), "left_semi")
-    // the cache is LOW-DISK-MODE-ONLY: wrapping the semi-join in an
-    // InMemoryRelation hides it from AQE's runtime re-plan, and in
-    // the default mode that forfeits the runtime broadcast of the
-    // candidate-id list (measured 4x on the 2M verify stage). In
-    // low-disk mode the broadcast is already pinned by hint, and the
-    // cache stops the uncached lazy shingle projection from being
-    // recomputed for both pair sides.
-    val shSets =
-      if (bandGroups > 1) shSetsBase.cache() else shSetsBase
+      bandGroups: Int): DataFrame =
+    if (bandGroups <= 1)
+      verifyPairs(shingled,
+        candidatePairs(bandHashes(sig, numHashes, bands)), threshold)
+    else {
+      val candidates = candidatesSliced(sig, numHashes, bands, bandGroups)
+      // verify-join DIET: only docs that appear in some candidate pair
+      // need their shingle arrays. The id list is BROADCAST (ids are 8
+      // bytes — even 20M colliding docs are a ~160 MB build side), so
+      // the corpus-sized lazy shingle projection is filtered in place
+      // with NO shuffle and arrays of never-colliding docs never exist
+      // off-CPU; the dieted relation is checkpointed because both pair
+      // sides read it — left to AQE at 20M, the estimator picked a
+      // sort-merge semi-join that shuffled the recomputed 20M-doc array
+      // relation TWICE and overflowed the host's disk in sort spills.
+      val candIds = candidates.select(col("doc_a").as("doc_id"))
+        .union(candidates.select(col("doc_b").as("doc_id")))
+        .distinct()
+      val dieted = shingled.select(col("doc_id"), col("sh"))
+        .join(broadcast(candIds), Seq("doc_id"), "left_semi")
+        .localCheckpoint(eager = false)
+      verifyPairs(dieted, candidates, threshold)
+    }
+
+  /** Exact-Jaccard verification of a (doc_a, doc_b) candidate relation
+    * against a (doc_id, sh) shingle-set relation: (doc_a, doc_b,
+    * jaccard) for every candidate with jaccard >= threshold, rounded
+    * to 6 places like `ngramJaccard`. */
+  private def verifyPairs(shingled: DataFrame, candidates: DataFrame,
+      threshold: Double): DataFrame = {
+    val sh = shingled.select(col("doc_id"), col("sh"))
     candidates
-      .join(shSets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(shSets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("inter", // fused count (r21) — identical to
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+      .withColumn("inter", // fused count — identical to
         // size(array_intersect(..)), no intersection-array build
         GraftFunctions.intersectCount(col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("inter").cast("double") /
@@ -414,10 +328,10 @@ object Dedup {
     * cleaner reclaims them before the next slice runs. The union of
     * slice pair sets, deduped, IS the full candidate set — a pair
     * sharing a band in slice g surfaces from slice g, and
-    * `candidatesOf`'s semantics are per-band to begin with. Cost:
-    * `groups` passes over the (cached) signature relation instead of
-    * one — the classic space-for-scans trade, chosen past the auto
-    * threshold or when the caller asks (`bandGroups > 1`).
+    * `candidatePairs`'s semantics are per-band to begin with. Cost:
+    * `groups` passes over the signature relation instead of one — the
+    * classic space-for-scans trade, chosen past the auto threshold or
+    * when the caller asks (`bandGroups > 1`).
     *
     * SCRATCH STORAGE: slice pair sets park under `graft.lsh.scratch`
     * (a Spark conf), resolved through the Hadoop FileSystem — on a
@@ -427,10 +341,10 @@ object Dedup {
     * is correct only in local mode, where this mode was measured. The
     * parked sets are deleted before returning — the deduped candidate
     * relation is localCheckpointed first, so the returned DataFrame
-    * does not depend on the scratch files. */
-  private def candidatesSliced(reps: DataFrame, sig: DataFrame,
+    * does not depend on the scratch files (nor on `sig`). */
+  private def candidatesSliced(sig: DataFrame,
       numHashes: Int, bands: Int, groups: Int): DataFrame = {
-    val spark = reps.sparkSession
+    val spark = sig.sparkSession
     val scratchRoot = spark.conf.get("graft.lsh.scratch",
       System.getProperty("java.io.tmpdir"))
     val tmpPath = new org.apache.hadoop.fs.Path(scratchRoot,
@@ -453,21 +367,13 @@ object Dedup {
           "graft.lsh.scratch to shared storage (HDFS/S3) or force " +
           "bandGroups = 1.")
     val tmp = tmpPath.toString
-    // materialize the rep relation ONCE: each slice then reads cached
-    // blocks instead of re-running the sig ⋈ groups semi-join shuffle
-    // per slice, and the (equally large) upstream signature cache is
-    // dropped immediately — at any moment only ONE signature-sized
-    // store lives on disk, the low-disk invariant of this mode
-    val repsC = reps.cache()
-    repsC.count()
-    sig.unpersist(blocking = true) // reclaim before the slices shuffle
     val perGroup = math.ceil(bands.toDouble / groups).toInt
     (0 until groups).foreach { g =>
       val lo = g * perGroup
       val hi = math.min(bands, lo + perGroup)
       if (lo < hi) {
-        candidatesOf(
-          bandHashes(repsC, numHashes, bands)
+        candidatePairs(
+          bandHashes(sig, numHashes, bands)
             .filter(col("band") >= lo && col("band") < hi))
           .write.mode("append").parquet(tmp)
         // let the context cleaner drop this slice's now-unreferenced
@@ -475,7 +381,6 @@ object Dedup {
         System.gc()
       }
     }
-    repsC.unpersist(blocking = true) // reclaim before the verify joins
     // cross-slice dedup: a pair colliding in several slices appears in
     // each of their parked sets exactly once. localCheckpoint (eager)
     // severs the result from the scratch files so they can be deleted
@@ -501,72 +406,47 @@ object Dedup {
 
   /** Distinct (doc_a < doc_b) pairs sharing at least one band — the
     * single definition of the LSH candidate condition, used by the
-    * verified batch path and the streaming twin's equality spec.
-    * Singleton buckets (the overwhelming majority: docs×bands rows,
-    * almost all unique hashes) can never produce a pair, so they are
-    * pruned with one map-side-combined count BEFORE the self-join —
-    * at 2M docs this cuts the join's shuffle from 128M band rows per
-    * side to only the colliding ones. Pair semantics are identical. */
-  private[graft] def candidatesOf(banded: DataFrame): DataFrame = {
-    // ONE shuffle of the banded relation (numHashes rows/doc): bucket
-    // membership via groupBy + collect_list — singleton buckets (the
-    // overwhelming majority) die inside the same shuffle for free —
-    // then the sorted within-bucket (a < b) pairs, deduped across
-    // bands. This replaced a hot-bucket prefilter + bucket-keyed
-    // self-join that shuffled the banded rows three times (hot
-    // aggregate, prune join, self-join); measured at the 2M planted
-    // corpus the candidate stage dropped 69s -> 45s with a
-    // bit-identical pair set. Per-bucket work is quadratic in bucket
-    // size for BOTH formulations (every colliding pair must surface —
-    // the exactness contract of the verify step); at 100 TB the
-    // bucket-size distribution is the dial, set by `bands` and the
-    // band width r = numHashes/bands.
-    //
-    // The bucket key is band_hash ALONE (band projected away before
-    // the shuffle — ~20% fewer bytes): LshBandHashes seeds each
-    // band's hash with the band index, so a cross-band key collision
-    // is a 2^-64 event, and even then it only MERGES two buckets —
-    // a superset of candidate pairs that the exact-jaccard verify
-    // step is contracted to kill. Misses remain impossible.
-    banded.select(col("band_hash"), col("doc_id"))
-      .groupBy(col("band_hash"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(array_sort(col("ids")).as("ids"))
-      .select(explode(pairsOfSorted(col("ids"))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
+    * one-pass and band-sliced verify paths, the persisted-signature
+    * path and the streaming twin's equality spec.
+    *
+    * The band rows move at most ONCE: a bucket-keyed self-join that
+    * broadcasts one side while the banded relation is small and, past
+    * the broadcast threshold, sort-merges two sides that are the same
+    * hash exchange (planned once, reused). Singleton buckets — the
+    * overwhelming majority of the docs × bands rows — meet only
+    * themselves and die in the join, which feeds one map-side-combined
+    * distinct (a pair colliding in several bands surfaces once per
+    * band). A groupBy + collect_list bucket list is slower here: its
+    * object aggregate over the mostly-singleton buckets doubled
+    * `lshCandidatePairs` (3.0 s vs 1.5 s at 10K docs, 4 cores).
+    * Per-bucket work is quadratic in bucket size for both shapes (every
+    * colliding pair must surface — the exactness contract of the
+    * verify step); at 100 TB the bucket-size distribution is the dial,
+    * set by `bands` and the band width r = numHashes/bands.
+    *
+    * The bucket key is band_hash ALONE (band projected away before
+    * the shuffle — ~20% fewer bytes): LshBandHashes seeds each
+    * band's hash with the band index, so a cross-band key collision
+    * is a 2^-64 event, and even then it only MERGES two buckets —
+    * a superset of candidate pairs that the exact-jaccard verify
+    * step is contracted to kill. Misses remain impossible. */
+  private def candidatePairs(banded: DataFrame): DataFrame = {
+    val b = banded.select(col("band_hash"), col("doc_id"))
+    b.as("a")
+      .join(b.as("b"), col("a.band_hash") === col("b.band_hash") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-  }
-
-  /** All (doc_a < doc_b) pairs of an ascending-sorted id array as an
-    * array of structs — the shared in-bucket pair emission. Caller
-    * must guarantee size >= 2 (sequence() would run DESCENDING on a
-    * singleton's 0..-1 bound). */
-  private[graft] def pairsOfSorted(ids: Column): Column = {
-    val s = size(ids)
-    flatten(transform(
-      sequence(lit(0), s - 2),
-      i => transform(
-        slice(ids, i + 2, s - i - 1),
-        b => struct(element_at(ids, (i + 1).cast("int")).as("doc_a"),
-          b.as("doc_b")))))
   }
 
   /** The PRE-VERIFICATION LSH candidate pair set — exposed for the
     * streaming twin's equality spec. */
   def lshCandidatePairs(docs: DataFrame, shingleN: Int,
       numHashes: Int = 128, bands: Int = 64,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // localCheckpoint, not cache: same CollapseProject hazard as
-    // minhashLsh (the banded self-join would inline the 128-hash
-    // signature twice), but nothing here survives to unpersist later
-    val sig = docs.select(col(idCol).as("doc_id"),
-        shinglesOf(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), minhashSignature(col("sh"), numHashes).as("sig"))
-      .localCheckpoint(eager = false)
-    candidatesOf(bandHashes(sig, numHashes, bands))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    candidatePairs(bandHashes(
+      signatureTable(docs, shingleN, numHashes, idCol, textCol)
+        .localCheckpoint(eager = false), numHashes, bands))
 
   /** SimHash 64-bit fingerprints (native expression, §2.10). */
   def simhashSignatures(docs: DataFrame, idCol: String = "doc_id",
@@ -655,16 +535,14 @@ object Dedup {
     * computed and filtered inside the join's codegen stage BEFORE the
     * distinct shuffle.
     *
-    * Deliberately a JOIN, not the bucket-list (groupBy+collect_list)
-    * shape the LSH candidatesOf uses: 15/16-bit chunk values are a
+    * Deliberately a JOIN (like the LSH `candidatePairs`), not a
+    * bucket list (groupBy+collect_list): 15/16-bit chunk values are a
     * DENSE key space (~n/2^16 docs per bucket — hundreds at 20M), so
     * pair volume is inherently large and the per-pair cost dominates;
     * the codegen'd sort-merge join + whole-stage hamming filter
     * processes those pairs ~3x faster than the allocation-heavy
     * array-expression emission (measured at 20M: 102s join vs 329s
-    * bucket-list, identical pairs). LSH is the opposite regime —
-    * band-seeded 64-bit hashes make buckets mostly singletons, so the
-    * shuffle COUNT dominates and the one-pass bucket list wins. */
+    * bucket-list, identical pairs). */
   private def pigeonholePairs(sigs: DataFrame, chunks: Seq[Column],
       hamming: (Column, Column) => Column, maxHamming: Int,
       guard: DataFrame): DataFrame = {

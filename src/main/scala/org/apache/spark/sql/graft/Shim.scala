@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SparkStrategy
 
@@ -37,5 +38,20 @@ object Shim {
       exp.extraOptimizations = exp.extraOptimizations :+ rule
     }
   }
+
+  /** Block until every event posted so far has reached every listener
+    * — the happens-before edge a caller needs to read listener-updated
+    * fields after an action (`waitUntilEmpty` is `private[spark]`). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Entries registered with the session's cache manager. */
+  def numCachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[ClassicSession].sharedState.cacheManager.numCachedEntries
+
+  /** Spark's own wrong-argument-count error for a registered function
+    * builder (`QueryCompilationErrors` is `private[sql]`). */
+  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
+    QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)
 
 }

@@ -98,6 +98,18 @@ class OptimizationParitySpec extends AnyFunSuite {
     assert(nullArr.head.isNullAt(0))
   }
 
+  test("graft_intersect_count rejects a call without exactly 2 arguments") {
+    GraftFunctions.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_intersect_count(array('a'))").collect())
+    assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", e.getMessage)
+    assert(e.getMessage.contains("graft_intersect_count") &&
+      e.getMessage.contains("requires 2 parameters") &&
+      e.getMessage.contains("actual number is 1"), e.getMessage)
+    assert(spark.sql("SELECT graft_intersect_count(array('a', 'b'), " +
+      "array('b'))").head().getInt(0) == 1)
+  }
+
   test("classifier sampled training: driver-local replay == distributed") {
     val docs = Tables.load(spark, sf, "documents")
     val isGood = size(split(col("text"), " ")) >= 40

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
@@ -15,14 +16,53 @@ class PipelineSpec extends AnyFunSuite {
   private def embeddings = Tables.load(spark, sf, "embeddings")
 
   test("minhash-LSH finds exactly the exact-jaccard pairs") {
-    val lsh = Dedup.minhashLsh(docs, shingleN = 3, threshold = 0.5)
-      .select($"doc_a", $"doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Dedup.ngramJaccard(docs, n = 3, threshold = 0.5)
-      .select($"doc_a", $"doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lsh == exact, s"LSH=${lsh.size} exact=${exact.size}")
+    // pairs AND their jaccard values: the verify step must reproduce
+    // the exact common-shingle arithmetic, not only the pair set
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select($"doc_a", $"doc_b", $"jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val lsh = canon(Dedup.minhashLsh(docs, shingleN = 3, threshold = 0.5))
+    val exact = canon(Dedup.ngramJaccard(docs, n = 3, threshold = 0.5))
+    assert(lsh.keySet == exact.keySet, s"LSH=${lsh.size} exact=${exact.size}")
+    assert(lsh == exact, "jaccard values differ from ngramJaccard")
     assert(exact.nonEmpty, "fixture should contain planted near-dups")
+  }
+
+  test("minhash-LSH leaves the session's cache manager as it found it") {
+    val before = Shim.numCachedEntries(spark)
+    assert(Dedup.minhashLsh(docs, shingleN = 3, threshold = 0.5)
+      .collect().nonEmpty)
+    assert(Shim.numCachedEntries(spark) <= before)
+    // the band-sliced mode caches its signature table only while the
+    // slices run
+    assert(Dedup.minhashLsh(docs, shingleN = 3, threshold = 0.5,
+      bandGroups = 2).collect().nonEmpty)
+    assert(Shim.numCachedEntries(spark) <= before)
+  }
+
+  test("minhash-LSH one-pass collect stays a short job chain") {
+    // every job the call launches — the auto-mode corpus count, the
+    // candidate shuffle, the distinct and the verify joins, AQE stage
+    // jobs included (they inherit the caller's job group)
+    val maxJobs = 8 // 7 measured on the fixture, plus one of slack
+    val group = "minhash-lsh-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .contains(group)) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-count pin")
+    try Dedup.minhashLsh(docs, shingleN = 3, threshold = 0.5).collect()
+    finally sc.clearJobGroup()
+    Shim.drainListenerBus(spark)
+    sc.removeSparkListener(listener)
+    assert(jobs.get > 0)
+    assert(jobs.get <= maxJobs, s"${jobs.get} jobs > $maxJobs")
   }
 
   test("band-sliced LSH (bandGroups > 1) equals the one-pass path " +
@@ -85,25 +125,6 @@ class PipelineSpec extends AnyFunSuite {
       docs, persisted, shingleN = 3, threshold = 0.5))
     val oneShot = canon(Dedup.minhashLsh(docs, shingleN = 3, threshold = 0.5))
     assert(fromDisk == oneShot && oneShot.nonEmpty)
-  }
-
-  test("two-phase sig collapse equals the plain full-signature groupBy") {
-    // sigCollapseGroups keeps the hot path on 8-byte hash keys and
-    // regroups only multi-member hash groups by the full signature —
-    // the result must be EXACTLY the partition a direct groupBy(sig)
-    // produces (same groups, same reps), including actual duplicate
-    // signatures (the corpus has planted exact copies)
-    val sig = Dedup.signatureTable(docs, shingleN = 3)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select($"rep", $"members").collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    val twoPhase = canon(Dedup.sigCollapseGroups(sig))
-    val plain = canon(sig.groupBy($"sig")
-      .agg(array_sort(collect_list($"doc_id")).as("members"))
-      .select(element_at($"members", 1).as("rep"), $"members"))
-    assert(twoPhase == plain && twoPhase.nonEmpty)
-    // the fixture genuinely exercises the multi-member arm
-    assert(plain.exists(_._2.size > 1), "no duplicate signatures planted")
   }
 
   test("simhash pairs include the highest-jaccard planted dup") {
