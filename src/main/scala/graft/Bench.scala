@@ -49,6 +49,20 @@ object Bench {
     else -1.0
   }
 
+  /** Geometric mean of the positive entries (a failed query's -1 is
+    * left out); -1 when there are none. */
+  private[graft] def geomean(xs: Seq[Double]): Double = {
+    val pos = xs.filter(_ > 0)
+    if (pos.isEmpty) -1.0 else math.exp(pos.map(math.log).sum / pos.size)
+  }
+
+  /** HEAD's commit of the working directory's git checkout; empty when
+    * git or the checkout is unavailable. */
+  private[graft] def gitSha(): String =
+    scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim)
+      .toOption.filter(_.matches("[0-9a-f]{40}")).getOrElse("")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -374,8 +388,11 @@ object Bench {
       calibVecLong.map(fmt(_, 3)).mkString("[", ",", "]")
     val calibFields =
       s""""calib_sec":${fmt(calibSec, 3)},"calib_vec":$calibVecJson,"calib_vs_prev":${fmt(calibVsPrev, 3)},"calib_vec_long":$calibVecLongJson,"calib_long_vs_prev":${fmt(calibLongVsPrev, 3)}"""
+    // provenance: cores, commit, and the geomean of every query's wall
+    val provFields =
+      s""""cpus":${cpus.trim.toInt},"git_sha":"${gitSha()}","geomean":${fmt(geomean(results.map(_._2)), 3)}"""
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec",$calibFields,"queries":$fullQs$fullErrField,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec",$calibFields,$provFields,"queries":$fullQs$fullErrField,"sf":"$sfName"}"""
     try {
       val out = new java.io.PrintWriter("BENCH_full.json")
       try out.println(fullLine) finally out.close()
@@ -412,7 +429,7 @@ object Bench {
         .mkString(",\"errors\":{", ",", "}")
     val omitted = results.length - included.length
     val line =
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec",$calibFields,"queries":$compactQs,"omitted":$omitted,"n_queries":${results.length}$errField,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec",$calibFields,$provFields,"queries":$compactQs,"omitted":$omitted,"n_queries":${results.length}$errField,"sf":"$sfName"}"""
     // stdout carries ONLY the compact line: a >2000-char full line
     // would leave a truncated JSON fragment in the tail window ahead
     // of it (the full detail lives in BENCH_full.json)

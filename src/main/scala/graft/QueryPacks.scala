@@ -2435,8 +2435,8 @@ object AnnQueries {
     "grid_brackets" -> ((s, d) =>
       Analytics.bracketSummary(gridResults(s, d), "npartitions")),
     // the J7 grid machinery under a FULL oracle: GridSearch.run's
-    // shared-scan evaluation (one index scan at max nprobe, per-level
-    // top-k + recall + candidate counts from the probe-rank fanout)
+    // shared-scan evaluation (one bounded-heap pass over the index at
+    // max nprobe feeding every level's top-k + candidate count)
     // driven with FIXED data-row centroids injected through the
     // sharedQuantizers hook — every deterministic output column
     // (recall, n_candidates, totals) becomes exactly SQL-reproducible;
@@ -2905,12 +2905,17 @@ object AnnQueries {
           Pq.refineShortlist(shortlist, data, q, K),
           sh.truth)
         .select(col("recall").as("recall_refined"))
-      pure.crossJoin(refined)
+      val out = pure.crossJoin(refined)
         // floors self-report regressions (sf0.01 observed: 0.31 / 0.58;
         // refined must also beat pure ADC — the re-rank can only help)
         .withColumn("ok", col("recall_adc") >= lit(0.25) &&
           col("recall_refined") >= lit(0.5) &&
           col("recall_refined") >= col("recall_adc"))
+      // the one-row result is materialized so both caches drop here
+      val row = s.createDataFrame(
+        java.util.Arrays.asList(out.collect(): _*), out.schema)
+      shortlist.unpersist(); codes.unpersist()
+      row
     }),
     // fp16-stored corpus (the reference's embedding dtype,
     // README_reviews.md:84): the data side is snapped to the 2^-7

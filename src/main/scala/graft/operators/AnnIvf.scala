@@ -1003,6 +1003,94 @@ object AnnIvf {
       .agg(sum(col("n"))).head().getLong(0)
   }
 
+  /** Probe ranking as a narrow per-row expression, collected for the
+    * heap kernel: (qid, vector, probed cells nearest first). */
+  private[operators] def probedQueries(centroids: DataFrame,
+      queries: DataFrame, nprobe: Int, qidCol: String = "qid",
+      qvecCol: String = "q_embedding"): Array[(Long, Array[Float], Array[Int])] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val matrix = collectCentroids(centroids)
+    queries
+      .select(col(qidCol).cast("long"), col(qvecCol),
+        GraftFunctions.nearestCells(col(qvecCol), matrix, nprobe))
+      .as[(Long, Array[Float], Array[Int])].collect()
+  }
+
+  /** The per-partition probe-and-scan heap loop, shared by `searchFast`
+    * (one level) and the grid's nprobe sweep (`GridSearch.run`).
+    * `levels` are ascending nprobe values; a row whose cell a query
+    * probes at 1-based rank r is a candidate of every level >= r. Each
+    * (query, row) pair is scored ONCE: the first covering level's heap
+    * gives the early-abandon bound, the loosest of them (a later level
+    * sees a superset of its candidates, so its k-th best is never
+    * larger), and the distance then goes to every covering level.
+    * Returns heaps(level)(query) and the candidate counts(level)(query)
+    * (rows of rank <= levels(level)). */
+  private[operators] def scanLevels(rows: Iterator[(Long, Array[Float], Int)],
+      qs: Array[(Long, Array[Float], Array[Int])], levels: Array[Int],
+      k: Int, mcode: Int)
+      : (Array[Array[graft.functions.TopKBuffer]], Array[Array[Long]]) = {
+    val nL = levels.length
+    val maxRank = math.min(levels.last,
+      if (qs.isEmpty) 0 else qs.map(_._3.length).max)
+    // probe rank -> index of the first level covering it
+    val levelOf = new Array[Int](maxRank + 1)
+    var r = 1
+    var l = 0
+    while (r <= maxRank) {
+      while (levels(l) < r) l += 1
+      levelOf(r) = l
+      r += 1
+    }
+    // cid -> (query indices probing it, their first covering level)
+    val byCell = scala.collection.mutable.HashMap.empty[Int,
+      (scala.collection.mutable.ArrayBuilder.ofInt,
+        scala.collection.mutable.ArrayBuilder.ofInt)]
+    var qi = 0
+    while (qi < qs.length) {
+      val probed = qs(qi)._3
+      var i = 0
+      while (i < math.min(probed.length, maxRank)) {
+        val (qb, lb) = byCell.getOrElseUpdate(probed(i),
+          (new scala.collection.mutable.ArrayBuilder.ofInt,
+            new scala.collection.mutable.ArrayBuilder.ofInt))
+        qb += qi
+        lb += levelOf(i + 1)
+        i += 1
+      }
+      qi += 1
+    }
+    val cells = byCell.map { case (c, (qb, lb)) => c -> (qb.result(), lb.result()) }
+    val heaps = Array.fill(nL, qs.length)(new graft.functions.TopKBuffer(k))
+    val counts = Array.ofDim[Long](nL, qs.length)
+    rows.foreach { case (id, v, cid) =>
+      cells.get(cid) match {
+        case Some((qids, firstLevel)) =>
+          var j = 0
+          while (j < qids.length) {
+            val q = qids(j)
+            val l0 = firstLevel(j)
+            counts(l0)(q) += 1
+            // distBounded contract: a partial strictly above the bound
+            // is rejected by insert either way
+            val d = Knn.distBounded(mcode, v, qs(q)._2, heaps(l0)(q).bound)
+            var l = l0
+            while (l < nL) { heaps(l)(q).insert(d, id); l += 1 }
+            j += 1
+          }
+        case None => ()
+      }
+    }
+    l = 1
+    while (l < nL) {
+      qi = 0
+      while (qi < qs.length) { counts(l)(qi) += counts(l - 1)(qi); qi += 1 }
+      l += 1
+    }
+    (heaps, counts)
+  }
+
   /** Probe-and-scan search, heap lowering: same semantics as `search`
     * (exact top-k within the nprobe nearest cells per query,
     * deterministic tie-break) but the candidate stream is never
@@ -1020,50 +1108,16 @@ object AnnIvf {
       metric: String = "sqeuclidean"): DataFrame = {
     val spark = indexed.sparkSession
     import spark.implicits._
-    // probe ranking as a narrow per-row expression, then collected:
-    // (qid, vec, probed cells)
-    val matrix = collectCentroids(centroids)
-    val probed = queries
-      .select(col(qidCol).cast("long"), col(qvecCol),
-        GraftFunctions.nearestCells(col(qvecCol), matrix, nprobe))
-      .as[(Long, Array[Float], Array[Int])].collect()
-    val bc = spark.sparkContext.broadcast(probed)
-    val met = metric
+    val bc = spark.sparkContext.broadcast(
+      probedQueries(centroids, queries, nprobe, qidCol, qvecCol))
+    val code = Knn.metricCode(metric)
     val partials = indexed
       .select(col(idCol).cast("long"), col(vecCol), col("cid"))
       .as[(Long, Array[Float], Int)]
       .mapPartitions { it =>
         val qs = bc.value
-        // cid -> indices of queries probing it
-        val byCell = scala.collection.mutable.HashMap
-          .empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
-        var qi = 0
-        while (qi < qs.length) {
-          qs(qi)._3.foreach(c =>
-            byCell.getOrElseUpdate(c.toInt,
-              scala.collection.mutable.ArrayBuffer.empty) += qi)
-          qi += 1
-        }
-        val cells = byCell.map { case (c, l) => c -> l.toArray }.toMap
-        val heaps = Array.fill(qs.length)(new graft.functions.TopKBuffer(k))
-        val code = Knn.metricCode(met)
-        it.foreach { case (id, v, cid) =>
-          cells.get(cid) match {
-            case Some(qids) =>
-              var j = 0
-              while (j < qids.length) {
-                val q = qids(j)
-                // abandon against the heap's k-th best (distBounded
-                // contract: a partial strictly above it is rejected
-                // by insert either way)
-                val h = heaps(q)
-                h.insert(Knn.distBounded(code, v, qs(q)._2, h.bound), id)
-                j += 1
-              }
-            case None => ()
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
+        val (heaps, _) = scanLevels(it, qs, Array(nprobe), k, code)
+        heaps(0).iterator.zipWithIndex.flatMap { case (h, i) =>
           h.sorted.iterator.map { case (d, id) => (qs(i)._1, id, d) }
         }
       }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftFunctions
-
 /** Parameter-grid benchmark runner — the engine's equivalent of the
   * reference's sequential combo loop
   * (/root/reference/cuvs_bench_grid_search_v3.py:639-722): cartesian
@@ -12,18 +10,20 @@ import graft.GraftFunctions
   * per build-param combo, per-combo recall against the exact oracle,
   * one results row per combo (result dict :315-335).
   *
-  * Scale design — shared-scan evaluation: the reference re-runs the
+  * Scale design — one heap pass per build: the reference re-runs the
   * search once per search-param combo over the same index. Here all
-  * `nprobe` levels of one build are evaluated from a SINGLE scan of
-  * the index at max(nprobe): each candidate row carries the probe rank
-  * `r` of its cell for that query, and level `p` simply keeps rows
-  * with r <= p. At 100 TB this turns G combos x full-index scans into
-  * one scan — the dominant cost — and the per-level top-k/recall aggs
-  * run over the (tiny) candidate stream. Timings are wall clock around
-  * actions; recall and n_candidates are deterministic, so downstream
-  * analytics (Pareto/brackets/argmax) stay reproducible. QPS is
-  * human-facing: per-combo search_time is the shared-scan wall
-  * attributed cost-proportionally (by candidate rows scanned).
+  * `nprobe` levels of one build come from a SINGLE scan of the index
+  * at max(nprobe), in bounded per-query heaps (the shared-state idea
+  * of answering related top-k queries from one scan): a row whose cell
+  * a query probes at rank `r` is scored once and offered to the heap of
+  * every level p >= r, and each level's candidate count grows with it.
+  * Only q x levels x k heap entries per partition leave the executors,
+  * merged on the driver — the candidate stream is never materialized
+  * as rows. Timings are wall clock around actions; recall and
+  * n_candidates are deterministic, so downstream analytics
+  * (Pareto/brackets/argmax) stay reproducible. QPS is human-facing:
+  * per-combo search_time is the shared-scan wall attributed
+  * cost-proportionally (by candidate rows scanned).
   */
 object GridSearch {
 
@@ -79,7 +79,9 @@ object GridSearch {
         val c = AnnIvf.train(filtered, np, iterations = iterations).cache()
         val idx = AnnIvf.index(filtered, c).cache()
         built(np) = (c, idx, 0.0) // registered for cleanup pre-materialize
-        idx.count()
+        // an empty relation trains no quantizer: fail here, so both
+        // sweeps turn it into P9 error rows
+        require(idx.count() > 0, s"npartitions=$np: no vectors to train on")
         built(np) = (c, idx, (System.nanoTime() - t0) / 1e9)
       }
     }
@@ -112,12 +114,8 @@ object GridSearch {
     val nVec = filtered.count()
     val nQ = q.count()
     val keptPct = 100.0 * nVec / totalBase
-    // exact oracle, pre-grouped once: (qid, gt_ids)
-    val truthSets = precomputedTruth.getOrElse {
-      val t = truthSetsOf(data, queries, filterCol, k).cache()
-      t.count()
-      t
-    }
+    val truth = truthMapOf(precomputedTruth.getOrElse(
+      truthSetsOf(data, queries, filterCol, k)))
 
     // groups evaluated concurrently (r20, guide §2.6) — independent
     // builds/evaluations; assembled in sorted-np order so the output
@@ -132,50 +130,12 @@ object GridSearch {
           val (centroids, indexed, buildSec) = shared.getOrElse(
             trainQuantizers(filtered, Seq(npart))(npart))
           try {
-
+          // every level of this build from one heap pass over the index
           val nprobes = combos.map(_.nprobe).distinct.sorted
-          val maxP = nprobes.max
           val t1 = System.nanoTime()
-          // one probe ranking at max nprobe (narrow NearestCells
-          // projection); r = 1-based probe rank
-          val probes = AnnIvf.probeRanks(centroids, q, maxP)
-            .withColumnRenamed("cid", "pcid")
-            .join(q, "qid")
-          // ONE index scan at max nprobe, probe rank attached
-          val cand = indexed.join(broadcast(probes),
-            indexed("cid") === probes("pcid"))
-          // fan out to the nprobe levels (row survives at level p iff
-          // its cell rank r <= p), then ONE fused aggregate pipeline:
-          // per-(level, qid) exact top-k AND candidate count in the
-          // same hash agg, recall + totals in the reduce — no
-          // intermediate cache, one job per npartitions group
-          val levels = nprobes.toDF("np")
-          val recallByNp = cand
-            .join(broadcast(levels), col("r") <= col("np"))
-            .select(col("np"), col("qid"), col("vec_id").cast("long").as("_nnid"),
-              GraftFunctions.sqDist(col("embedding"), col("q_embedding")).as("_dist"))
-            .groupBy(col("np"), col("qid"))
-            .agg(GraftFunctions.topK(k, col("_dist"), col("_nnid")).as("topk"),
-              count(lit(1)).as("qcand"))
-            .select(col("np"), col("qid"), col("topk.id").as("found_ids"),
-              col("qcand"))
-            // LEFT join: a query whose filtered truth set is empty (no
-            // truth row) must still count its candidates into n_cand
-            // and the cost-proportional wall-clock attribution; it
-            // contributes 0 to both recall terms via the empty-array
-            // coalesce, so recall is unchanged where truth exists
-            .join(broadcast(truthSets), Seq("qid"), "left")
-            .withColumn("gt_ids",
-              coalesce(col("gt_ids"), array().cast("array<bigint>")))
-            .groupBy(col("np"))
-            .agg(
-              coalesce(
-                sum(size(array_intersect(col("found_ids"), col("gt_ids"))))
-                  / sum(size(col("gt_ids"))), lit(0.0)).as("recall"),
-              sum(col("qcand")).as("n_cand"))
-            .select("np", "recall", "n_cand").collect()
-            .map(r => r.getInt(0) ->
-              (r.getDouble(1), r.getLong(2))).toMap
+          val recallByNp = nprobes.zip(levelTopK(indexed, centroids, q, k, nprobes))
+            .map { case (p, (found, nCand)) => p -> (recallOf(found, truth), nCand) }
+            .toMap
           val searchWall = (System.nanoTime() - t1) / 1e9
           val totalCand = math.max(recallByNp.values.map(_._2).sum, 1L)
 
@@ -190,7 +150,7 @@ object GridSearch {
           }
           } finally {
             // unpersist locally-trained caches on success AND failure —
-            // a throw mid-evaluation (e.g. the recall collect) must not
+            // a throw mid-evaluation (e.g. the heap-pass collect) must not
             // leak cached DataFrames for the rest of the session
             if (shared.isEmpty) { centroids.unpersist(); indexed.unpersist() }
           }
@@ -201,9 +161,78 @@ object GridSearch {
               Some(e.toString.take(200))))
         }.get
     }
-    if (precomputedTruth.isEmpty) truthSets.unpersist()
     filtered.unpersist(); q.unpersist()
     rows.toDF()
+  }
+
+  /** Every nprobe level of one build from ONE bounded-heap pass over
+    * the index: `AnnIvf.scanLevels` scores each (query, row) pair once
+    * and feeds every level covering the row's cell, and the driver
+    * merges the per-partition heaps (q x levels x k entries per
+    * partition). Per level, in `nprobes` order: (qid -> found ids, for
+    * the queries with at least one candidate; total candidate rows). */
+  private def levelTopK(indexed: DataFrame, centroids: DataFrame,
+      q: DataFrame, k: Int, nprobes: Seq[Int])
+      : Seq[(Seq[(Long, Array[Long])], Long)] = {
+    val spark = indexed.sparkSession
+    import spark.implicits._
+    val levels = nprobes.toArray
+    val probed = AnnIvf.probedQueries(centroids, q, levels.last)
+    val bc = spark.sparkContext.broadcast(probed)
+    val code = Knn.metricCode("sqeuclidean")
+    val partials = try {
+      indexed.select(col("vec_id").cast("long"), col("embedding"), col("cid"))
+        .as[(Long, Array[Float], Int)]
+        .mapPartitions { it =>
+          val (heaps, counts) = AnnIvf.scanLevels(it, bc.value, levels, k, code)
+          for {
+            l <- levels.indices.iterator
+            qi <- heaps(l).indices.iterator
+            if counts(l)(qi) > 0
+          } yield {
+            val e = heaps(l)(qi).sorted
+            (l, qi, counts(l)(qi), e.map(_._2), e.map(_._1))
+          }
+        }
+        .collect()
+    } finally bc.destroy()
+    val heaps = Array.fill(levels.length, probed.length)(
+      new graft.functions.TopKBuffer(k))
+    val counts = Array.ofDim[Long](levels.length, probed.length)
+    partials.foreach { case (l, qi, n, ids, dists) =>
+      counts(l)(qi) += n
+      ids.indices.foreach(i => heaps(l)(qi).insert(dists(i), ids(i)))
+    }
+    levels.indices.map { l =>
+      (probed.indices.filter(qi => counts(l)(qi) > 0)
+        .map(qi => probed(qi)._1 -> heaps(l)(qi).sorted.map(_._2)),
+        counts(l).sum)
+    }
+  }
+
+  /** (qid -> gt_ids) of a `truthSetsOf` table, collected once per sweep. */
+  private def truthMapOf(truthSets: DataFrame): Map[Long, Array[Long]] = {
+    val spark = truthSets.sparkSession
+    import spark.implicits._
+    truthSets.select(col("qid").cast("long"), col("gt_ids"))
+      .as[(Long, Array[Long])].collect().toMap
+  }
+
+  /** Recall of one configuration — the single definition both sweeps
+    * use: Σ|found ∩ truth| / Σ|truth| over the queries that found
+    * anything. A query without a truth row adds 0 to both sums (it
+    * still counts toward n_candidates); 0 when no truth is counted. */
+  private def recallOf(found: Seq[(Long, Array[Long])],
+      truth: Map[Long, Array[Long]]): Double = {
+    var hit = 0L
+    var all = 0L
+    found.foreach { case (qid, ids) =>
+      val gt = truth.getOrElse(qid, Array.emptyLongArray)
+      val gtSet = gt.toSet
+      hit += ids.distinct.count(gtSet)
+      all += gt.length
+    }
+    if (all == 0) 0.0 else hit.toDouble / all
   }
 
   /** Evaluate independent sweep groups from concurrent driver threads
@@ -259,11 +288,8 @@ object GridSearch {
     val nVec = filtered.count()
     val nQ = q.count()
     val keptPct = 100.0 * nVec / totalBase
-    val truthSets = precomputedTruth.getOrElse {
-      val t = truthSetsOf(data, queries, filterCol, k).cache()
-      t.count()
-      t
-    }
+    val truth = truthMapOf(precomputedTruth.getOrElse(
+      truthSetsOf(data, queries, filterCol, k)))
 
     val rows = grid.groupBy(_.npartitions).toSeq.sortBy(_._1)
       .flatMap { case (npart, npCombos) =>
@@ -304,13 +330,11 @@ object GridSearch {
             val t1 = System.nanoTime()
             val found = NswGraph.searchIndexProbed(graphs, probed, k,
               c.efSearch)
-            val rec = found
-              .groupBy(col("qid"))
-              .agg(collect_list("neighbor_id").as("found_ids"))
-              .join(broadcast(truthSets), "qid")
-              .agg((sum(size(array_intersect(col("found_ids"), col("gt_ids"))))
-                / sum(size(col("gt_ids")))).as("recall"))
-              .head().getDouble(0)
+            val rec = recallOf(found
+              .select(col("qid").cast("long"), col("neighbor_id").cast("long"))
+              .as[(Long, Long)].collect().toSeq
+              .groupMap(_._1)(_._2).toSeq
+              .map { case (qid, ids) => qid -> ids.toArray }, truth)
             val searchSec = (System.nanoTime() - t1) / 1e9
             // deterministic cost proxy: beam visits are bounded by
             // nprobe x efSearch x M per query
@@ -339,7 +363,6 @@ object GridSearch {
             }
         }
       }
-    if (precomputedTruth.isEmpty) truthSets.unpersist()
     filtered.unpersist(); q.unpersist()
     rows.toDF()
   }

@@ -70,4 +70,17 @@ class BenchSpec extends AnyFunSuite {
     assert(pass == 2 && lats.length == 3)
     assert(math.abs(total - lats.sum) < 0.25) // loop overhead only
   }
+
+  test("geomean: positive entries only, -1 when none") {
+    assert(math.abs(Bench.geomean(Seq(1.0, 4.0, 16.0)) - 4.0) < 1e-12)
+    // a failed query reports -1 and is left out
+    assert(math.abs(Bench.geomean(Seq(2.0, -1.0, 8.0)) - 4.0) < 1e-12)
+    assert(Bench.geomean(Seq(-1.0)) == -1.0)
+    assert(Bench.geomean(Seq.empty) == -1.0)
+  }
+
+  test("gitSha: a full commit hash or empty") {
+    val sha = Bench.gitSha()
+    assert(sha.isEmpty || sha.matches("[0-9a-f]{40}"), sha)
+  }
 }

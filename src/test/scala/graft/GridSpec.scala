@@ -1,15 +1,141 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Analytics, GridSearch}
+import graft.operators.{Analytics, AnnIvf, GridSearch}
 
 /** Grid-search runner + analytics determinism. */
-class GridSpec extends AnyFunSuite {
+class GridSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
   import spark.implicits._
   private val sf = TestSpark.sf
+
+  // shared truth + quantizers for the parity and job-count pins, as the
+  // benchmark and the grid_* pack share them
+  private var fixtureBuilt = false
+  private lazy val fixture = {
+    fixtureBuilt = true
+    val data = SparkEntry.dataDf(spark, sf)
+    val queries = SparkEntry.queriesDf(spark, sf)
+    val filtered = data.filter(SparkEntry.filterLow).cache()
+    val truth = GridSearch.truthSetsOf(data, queries, SparkEntry.filterLow)
+      .cache()
+    truth.count()
+    val quant = GridSearch.trainQuantizers(filtered, Seq(8, 16))
+    (data, queries, filtered, truth, quant)
+  }
+
+  override def afterAll(): Unit = {
+    if (fixtureBuilt) {
+      val (_, _, filtered, truth, quant) = fixture
+      quant.values.foreach { case (c, ix, _) => c.unpersist(); ix.unpersist() }
+      truth.unpersist(); filtered.unpersist()
+    }
+    super.afterAll()
+  }
+
+  private def runShared(truth: DataFrame): DataFrame = {
+    val (data, queries, _, _, quant) = fixture
+    GridSearch.run(spark, data, queries, "low", SparkEntry.filterLow,
+      totalBase = 1, precomputedTruth = Some(truth), sharedQuantizers = quant)
+  }
+
+  /** The fan-out evaluation the heap pass replaced, as a reference plan:
+    * probe ranks at max nprobe, every candidate row copied to each
+    * level >= its rank, per-(level, qid) `graft_topk` + candidate count,
+    * LEFT truth join (a query without truth adds 0 to both recall
+    * terms). (npartitions, nprobe) -> (recall rounded as `run` rounds
+    * it, n_candidates). */
+  private def fanOutReference(truth: DataFrame): Map[(Int, Int), (Double, Long)] = {
+    val (_, queries, _, _, quant) = fixture
+    GridSearch.defaultGrid.groupBy(_.npartitions).toSeq.flatMap {
+      case (np, combos) =>
+        val (centroids, indexed, _) = quant(np)
+        val nprobes = combos.map(_.nprobe).distinct.sorted
+        val probes = AnnIvf.probeRanks(centroids, queries, nprobes.max)
+          .withColumnRenamed("cid", "pcid")
+          .join(queries, "qid")
+        indexed.join(broadcast(probes), indexed("cid") === probes("pcid"))
+          .join(broadcast(nprobes.toDF("np")), $"r" <= $"np")
+          .select($"np", $"qid", $"vec_id".cast("long").as("_nnid"),
+            GraftFunctions.sqDist($"embedding", $"q_embedding").as("_dist"))
+          .groupBy($"np", $"qid")
+          .agg(GraftFunctions.topK(10, $"_dist", $"_nnid").as("topk"),
+            count(lit(1)).as("qcand"))
+          .select($"np", $"qid", $"topk.id".as("found_ids"), $"qcand")
+          .join(broadcast(truth), Seq("qid"), "left")
+          .withColumn("gt_ids",
+            coalesce($"gt_ids", array().cast("array<bigint>")))
+          .groupBy($"np")
+          .agg(
+            coalesce(
+              sum(size(array_intersect($"found_ids", $"gt_ids")))
+                / sum(size($"gt_ids")), lit(0.0)).as("recall"),
+            sum($"qcand").as("n_cand"))
+          .collect()
+          .map(r => (np, r.getInt(0)) ->
+            (math.rint(r.getDouble(1) * 1e6) / 1e6, r.getLong(2)))
+    }.toMap
+  }
+
+  private def recallAndCandidates(res: DataFrame): Map[(Int, Int), (Double, Long)] =
+    res.select($"npartitions", $"nprobe", $"recall", $"n_candidates", $"error")
+      .collect().map { r =>
+        assert(r.isNullAt(4), s"error row: ${r.getString(4)}")
+        (r.getInt(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3))
+      }.toMap
+
+  test("heap-pass grid equals the fan-out reference plan on every combo") {
+    val truth = fixture._4
+    val got = recallAndCandidates(runShared(truth))
+    assert(got.keySet == GridSearch.defaultGrid
+      .map(c => (c.npartitions, c.nprobe)).toSet)
+    assert(got == fanOutReference(truth))
+  }
+
+  test("heap-pass grid equals the fan-out reference when some query " +
+      "has no truth row") {
+    val (_, queries, _, truth, _) = fixture
+    // every third query loses its truth row: it still counts toward
+    // n_candidates and adds 0 to both recall terms
+    val partial = truth.filter($"qid" % 3 =!= 0)
+    assert(partial.count() < queries.count() && partial.count() > 0)
+    val got = recallAndCandidates(runShared(partial))
+    assert(got == fanOutReference(partial))
+    // candidates do not depend on truth; recall does
+    val full = recallAndCandidates(runShared(truth))
+    assert(got.map { case (c, v) => c -> v._2 } ==
+      full.map { case (c, v) => c -> v._2 })
+  }
+
+  test("one GridSearch.run with shared truth and quantizers stays a " +
+      "short job chain") {
+    // the two input counts, the truth collect, and per npartitions
+    // group the centroid collect, the probe collect and the heap pass,
+    // AQE stage jobs included
+    val maxJobs = 14 // 13 measured on the fixture, plus one of slack
+    val truth = fixture._4
+    val sc = spark.sparkContext
+    Shim.drainListenerBus(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try runShared(truth).collect()
+    finally {
+      Shim.drainListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get > 0)
+    assert(jobs.get <= maxJobs, s"${jobs.get} jobs > $maxJobs")
+  }
 
   // gridResults is the harmonized union of BOTH algo sweeps (J8);
   // ivf rows carry nprobe, nsw rows carry (m, ef_search)
